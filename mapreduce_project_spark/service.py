@@ -23,10 +23,24 @@ Protocol: one JSON object per line in, one per line out.
                                           "columns": [...], "rows": [...]}
   {"op": "shutdown"}                  → {"ok": true} (then exits)
 Errors: {"ok": false, "error": "..."}.
+
+`run` rejects an unknown ``query``, a missing ``sf_dir`` or a
+``limit`` that is not an integer >= 0 (default 20) before anything is
+built. Otherwise ``n`` and ``rows`` come from ONE execution of the
+query: the result is persisted, ``n`` is its count (which materializes
+it) and ``rows`` its first ``limit`` rows, read back from the
+persisted blocks. Everything the request persisted (that result, and
+any ``cache()``/``localCheckpoint()`` its builder made) is released,
+blocking, before the reply is written, so the long-lived session does
+not accumulate blocks. Each `run` executes in Spark job group
+``req-<k>`` and appends one JSON line to ``service.log``: ``query``,
+``ok``, ``n``, ``wall_s``, ``jobs``, ``error``.
 """
 
 from __future__ import annotations
 
+import contextlib
+import itertools
 import json
 import os
 import socket
@@ -47,6 +61,74 @@ def _paths(state_dir: str) -> tuple[str, str, str]:
     )
 
 
+def _request_error(registry: dict, name, sf_dir, limit) -> str | None:
+    """Why a `run` request cannot be served, or None; checked before any
+    DataFrame is built, so a bad request runs no Spark job."""
+    if not isinstance(name, str) or name not in registry:
+        return f"unknown query: {name}"
+    if not isinstance(sf_dir, str) or not sf_dir:
+        return f"sf_dir must be a non-empty path, got {sf_dir!r}"
+    if isinstance(limit, bool) or not isinstance(limit, int) or limit < 0:
+        return f"limit must be an integer >= 0, got {limit!r}"
+    return None
+
+
+@contextlib.contextmanager
+def _released(spark):
+    """Request scope: on exit, drop the session's cached DataFrames and
+    unpersist, blocking, every RDD that became persistent inside it."""
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keys())
+    try:
+        yield
+    finally:
+        # blocking removal first: clearCache() unpersists without waiting,
+        # and two removals of one RDD in flight at once can fail with
+        # "Block rdd_<id>_<p> does not exist"
+        for i, rdd in jsc.getPersistentRDDs().items():
+            if i not in before:
+                rdd.unpersist(True)
+        spark.catalog.clearCache()
+
+
+def run_query(spark, registry: dict, req: dict, group: str) -> dict:
+    """Serve one `run` request in Spark job group ``group``; returns the
+    reply and appends the request's JSON line to stdout (the service
+    log)."""
+    t0 = time.monotonic()
+    sc = spark.sparkContext
+    name, sf_dir, limit = req.get("query"), req.get("sf_dir"), req.get("limit", 20)
+    error = _request_error(registry, name, sf_dir, limit)
+    reply: dict = {"ok": False, "error": error}
+    if error is None:
+        sc.setJobGroup(group, name)
+        try:
+            with _released(spark):
+                df = registry[name](spark, sf_dir).persist()
+                n = df.count()
+                rows = [list(r) for r in df.limit(limit).collect()]
+                reply = {
+                    "ok": True,
+                    "n": n,
+                    "columns": df.columns,
+                    "rows": json.loads(json.dumps(rows, default=str)),
+                }
+        except Exception as exc:  # noqa: BLE001 - wire errors back
+            reply = {"ok": False, "error": f"{type(exc).__name__}: {exc}"}
+        finally:
+            sc._jsc.clearJobGroup()
+    record = {
+        "query": name,
+        "ok": reply["ok"],
+        "n": reply.get("n"),
+        "wall_s": round(time.monotonic() - t0, 3),
+        "jobs": len(sc.statusTracker().getJobIdsForGroup(group)),
+        "error": reply.get("error"),
+    }
+    print(json.dumps(record), flush=True)
+    return reply
+
+
 def serve(port: int = 0, state_dir: str = DEFAULT_STATE_DIR) -> None:
     """Run the service in-process (the `start` subcommand spawns this in
     a background child). Builds the SparkSession BEFORE advertising the
@@ -59,6 +141,7 @@ def serve(port: int = 0, state_dir: str = DEFAULT_STATE_DIR) -> None:
     spark = get_spark("service")
     registry = {**QUERIES, **EXTRA_QUERIES}
     t0 = time.monotonic()
+    request_ids = itertools.count(1)
 
     class Handler(socketserver.StreamRequestHandler):
         def handle(self) -> None:
@@ -83,18 +166,7 @@ def serve(port: int = 0, state_dir: str = DEFAULT_STATE_DIR) -> None:
             if op == "list":
                 return {"ok": True, "queries": sorted(registry)}
             if op == "run":
-                name = req.get("query")
-                if name not in registry:
-                    return {"ok": False, "error": f"unknown query: {name}"}
-                df = registry[name](spark, req.get("sf_dir", "/root/testdata/sf0.001"))
-                limit = int(req.get("limit", 20))
-                rows = [list(r) for r in df.limit(limit).collect()]
-                return {
-                    "ok": True,
-                    "n": df.count(),
-                    "columns": df.columns,
-                    "rows": json.loads(json.dumps(rows, default=str)),
-                }
+                return run_query(spark, registry, req, f"req-{next(request_ids)}")
             if op == "shutdown":
                 return {"ok": True, "_shutdown": True}
             return {"ok": False, "error": f"unknown op: {op}"}
@@ -159,22 +231,23 @@ def start(state_dir: str = DEFAULT_STATE_DIR, port: int = 0) -> int:
                 os.remove(p)
             except FileNotFoundError:
                 pass
-    log = open(log_file, "ab")
-    proc = subprocess.Popen(
-        [
-            sys.executable,
-            "-m",
-            "mapreduce_project_spark",
-            "serve",
-            "--port",
-            str(port),
-            "--state-dir",
-            state_dir,
-        ],
-        stdout=log,
-        stderr=subprocess.STDOUT,
-        start_new_session=True,
-    )
+    # the child inherits its own descriptor; the parent's closes here
+    with open(log_file, "ab") as log:
+        proc = subprocess.Popen(
+            [
+                sys.executable,
+                "-m",
+                "mapreduce_project_spark",
+                "serve",
+                "--port",
+                str(port),
+                "--state-dir",
+                state_dir,
+            ],
+            stdout=log,
+            stderr=subprocess.STDOUT,
+            start_new_session=True,
+        )
     deadline = time.monotonic() + _START_TIMEOUT_S
     while time.monotonic() < deadline:
         if os.path.exists(port_file):

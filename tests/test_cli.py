@@ -4,6 +4,7 @@ files loaded by function name, including the wrong-name negative case
 
 from __future__ import annotations
 
+import json
 import time
 
 import pytest
@@ -96,7 +97,14 @@ def test_service_lifecycle_end_to_end(tmp_path, capsys):
         assert "unknown query" in capsys.readouterr().err
 
         assert main(["logs", "--state-dir", state]) == 0
-        assert "service ready" in capsys.readouterr().out
+        out = capsys.readouterr().out
+        assert "service ready" in out
+        # one structured line per `run` submission
+        records = [json.loads(ln) for ln in out.splitlines() if ln.startswith("{")]
+        (wc,) = [r for r in records if r["query"] == "word_count"]
+        assert wc["ok"] and wc["n"] > 0 and wc["jobs"] > 0 and wc["error"] is None
+        (bad,) = [r for r in records if r["query"] == "nope"]
+        assert not bad["ok"] and bad["jobs"] == 0 and "unknown query" in bad["error"]
     finally:
         assert main(["stop", "--state-dir", state]) == 0
     assert main(["status", "--state-dir", state]) == 1
